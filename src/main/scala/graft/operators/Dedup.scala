@@ -199,6 +199,7 @@ object Dedup {
         explode(slice(col("__ids"), col("pos") + lit(2),
           greatest(size(col("__ids")) - col("pos") - lit(1), lit(0))))
           .as("id_b"))
+      .filter(col("id_a") < col("id_b")) // drop duplicate-id self-pairs
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // materialize now: pins the pair set, releases the signatures

@@ -476,30 +476,14 @@ object Retrieval {
       .filter(size(col("v")) > 0)
     val srcCents = Similarity.ivfReadCentroids(spark, srcIndexPath)
     val tgtCents = Similarity.ivfReadCentroids(spark, tgtIndexPath)
-    // per-vector probe cells against one centroid set — top nProbe by
-    // dot, cell-ascending ties (the ivfTopKIndexed selection order)
-    def probeCells(v: Array[Float],
-                   cents: Array[Array[Double]]): Seq[Int] =
-      cents.toIndexedSeq.zipWithIndex.map { case (plane, c) =>
-        c -> v.iterator.zip(plane.iterator).map { case (x, h) => x * h }.sum
-      }.sortBy { case (c, s) => (-s, c) }.take(nProbe).map(_._1)
     // the bounded query batch: ONE column-pruned lookup (ids absent
     // from the index drop silently — the marginMine filter semantics)
-    val qVecs = srcIdx.filter(col("id").isin(queryIds: _*))
-      .select(col("id"), col("v")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    val qDf = qVecs.toSeq.map { case (i, v) => (i, v.toSeq) }
-      .toDF("src_id", "xv")
-    val qProbe = qVecs.toSeq.flatMap { case (i, v) =>
-      probeCells(v, tgtCents).map(c => (i, c)) }.toDF("src_id", "cell")
-    val fwdCells = qProbe.select("cell").as[Int].collect().distinct.toSeq
-    // forward: probed target cells only (cell IN (...) partition-prunes
-    // the index scan), per-query restriction via the broadcast probe
-    // pairs, top-k per query — persisted, it feeds the mass agg, the
-    // candidate set, and the margin join (operator-persist convention)
-    val fwd = tgtIdx.filter(col("cell").isin(fwdCells: _*))
-      .join(broadcast(qProbe), Seq("cell"))
-      .join(broadcast(qDf), Seq("src_id"))
+    val q = srcIdx.filter(col("id").isin(queryIds: _*))
+      .select(col("id").as("src_id"), col("v").as("xv"))
+    // forward: top-k per query over its probed target cells — persisted,
+    // it feeds the mass agg, the candidate set, and the margin join
+    // (operator-persist convention)
+    val fwd = Similarity.probedRows(tgtIdx, q, tgtCents, nProbe)
       .select(col("src_id"), col("id").as("tgt_id"),
         Similarity.dotQuantized(col("v"), col("xv")).as("s"))
       .withColumn("r", row_number().over(Window.partitionBy("src_id")
@@ -513,18 +497,10 @@ object Retrieval {
     require(candIds.size <= maxCandidates,
       s"marginMineIndexed: ${candIds.size} forward candidates exceeds " +
         s"maxCandidates=$maxCandidates — lower k or the query batch")
-    val cVecs = tgtIdx.filter(col("id").isin(candIds: _*))
-      .select(col("id"), col("v")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    val cDf = cVecs.toSeq.map { case (i, v) => (i, v.toSeq) }
-      .toDF("tgt_id", "yv")
-    val cProbe = cVecs.toSeq.flatMap { case (i, v) =>
-      probeCells(v, srcCents).map(c => (i, c)) }.toDF("tgt_id", "cell")
-    val bwdCells = cProbe.select("cell").as[Int].collect().distinct.toSeq
+    val cand = tgtIdx.filter(col("id").isin(candIds: _*))
+      .select(col("id").as("tgt_id"), col("v").as("yv"))
     // backward: probed source cells × the bounded candidate batch
-    val bwdMass = srcIdx.filter(col("cell").isin(bwdCells: _*))
-      .join(broadcast(cProbe), Seq("cell"))
-      .join(broadcast(cDf), Seq("tgt_id"))
+    val bwdMass = Similarity.probedRows(srcIdx, cand, srcCents, nProbe)
       .select(col("tgt_id"), col("id").as("xs"),
         Similarity.dotQuantized(col("v"), col("yv")).as("s"))
       .withColumn("r", row_number().over(Window.partitionBy("tgt_id")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -650,9 +650,9 @@ object Similarity {
     }
   }
 
-  /** Load the centroid sidecar written by [[ivfWriteIndex]]. Columns are
-    * selected by name before collecting so the extraction cannot silently
-    * depend on the written file's column order. A missing sidecar (index
+  /** Load the centroid sidecar written by [[ivfWriteIndex]] under its
+    * declared schema: columns bind by name, whatever the file's column
+    * order, and no schema-inference job runs. A missing sidecar (index
     * written by an older build, or a crash between the data write and the
     * sidecar write) fails with an actionable message instead of a raw
     * path-not-found AnalysisException.
@@ -665,7 +665,8 @@ object Similarity {
     // contract lives here once, shared by every centroid-sidecar index
     // (IVF, SemDeDup); see writeCentroidSidecar.
     val side =
-      try spark.read.parquet(s"$path/_centroids").select("cell", "centroid")
+      try spark.read.schema("cell INT, centroid ARRAY<DOUBLE>")
+        .parquet(s"$path/_centroids")
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalStateException(
@@ -726,10 +727,7 @@ object Similarity {
     val qRows = idx.filter(col("id") === queryId).select("v").take(1)
     require(qRows.nonEmpty, s"ivfTopKIndexed: query id $queryId not in index $path")
     val qVec = qRows(0).getSeq[Float](0).toArray
-    val probeCells = cents.toIndexedSeq.zipWithIndex.map { case (plane, c) =>
-      c -> qVec.iterator.zip(plane.iterator).map { case (x, h) => x * h }.sum
-    }.sortBy(-_._2).take(nProbe).map(_._1)
-    idx.filter(col("cell").isin(probeCells: _*))
+    idx.filter(col("cell").isin(probeCells(qVec.map(_.toDouble), cents, nProbe): _*))
       .filter(col("id") =!= queryId)
       .select(col("id"), dotQuantized(col("v"),
         typedlit(qVec.toSeq)).as("score"))
@@ -737,29 +735,54 @@ object Similarity {
       .limit(k)
   }
 
+  /** A query vector's `nProbe` cells: centroid dot products (the
+    * left-to-right double sum from 0.0 of [[centroidScores]]) ranked as
+    * Spark sorts `score desc, cell asc` — NaN first, cell-ascending ties.
+    */
+  private[graft] def probeCells(v: Array[Double], cents: Array[Array[Double]],
+                                nProbe: Int): Seq[Int] = {
+    val scores = cents.map(h =>
+      v.iterator.zip(h.iterator).foldLeft(0.0) { case (s, (x, y)) => s + x * y })
+    cents.indices.sortBy(c => (scores(c), c))(Ordering.Tuple2(
+      Ordering.Double.TotalOrdering.reverse, Ordering.Int)).take(nProbe)
+  }
+
+  /** The rows of a persisted centroid index that a bounded query batch
+    * probes, each joined to its query. `queries` (key, vector) is collected
+    * eagerly, [[probeCells]] runs on the driver, and the result is ONE
+    * `idx` scan pruned by the static `cell IN (...)` (`PartitionFilters`)
+    * joined on cell to the broadcast local (key, vector, cell) relation.
+    */
+  private[graft] def probedRows(idx: DataFrame, queries: DataFrame,
+                                cents: Array[Array[Double]],
+                                nProbe: Int): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val probe = queries.collect().toSeq.flatMap { r =>
+      val v = r.getSeq[Number](1).iterator.map(_.doubleValue).toArray
+      probeCells(v, cents, nProbe).map(c => Row(r.get(0), r.get(1), c))
+    }
+    val probeDf = idx.sparkSession.createDataFrame(probe.asJava,
+      queries.schema.add("cell", "int", nullable = false))
+    idx.filter(col("cell").isin(probe.map(_.getInt(2)).distinct.sorted: _*))
+      .join(broadcast(probeDf), Seq("cell"))
+  }
+
   /** Multi-query top-k probe against a PERSISTED IVF index — the
-    * [[ivfTopKMulti]] shape over stored cells: per-query probe cells from
-    * the sidecar centroids, one broadcast join on cell, per-query ranking
-    * by window. The corpus-side scan touches only probed cells' rows.
+    * [[ivfTopKMulti]] shape over stored cells, query side resolved on the
+    * driver: calling it runs ONE eager, column-pruned, tombstone-excluded
+    * lookup of the query vectors (absent ids drop), and the frame is the
+    * [[probedRows]] scan ranked per query by window (cos desc, id asc).
     */
   def ivfTopKMultiIndexed(spark: org.apache.spark.sql.SparkSession,
                           path: String, queryIds: Seq[Long], k: Int,
                           nProbe: Int = 4): DataFrame = {
-    val cents = ivfReadCentroids(spark, path)
     val idx = graft.pipeline.Tombstones.exclude(
         spark.read.parquet(path), path)
       .select(col("id"), col("v"), col("cell"))
     val q = idx.filter(col("id").isin(queryIds: _*))
       .select(col("id").as("query_id"), col("v").as("qv"))
-    val probe = q.select(col("query_id"),
-        posexplode(array(centroidScores(col("qv"), cents): _*)))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("col").desc, col("pos").asc)))
-      .filter(col("__rn") <= nProbe)
-      .select(col("query_id"), col("pos").cast("int").as("cell"))
-    idx.join(broadcast(probe), Seq("cell"))
+    probedRows(idx, q, ivfReadCentroids(spark, path), nProbe)
       .filter(col("id") =!= col("query_id"))
-      .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("id"), cosine(col("v"), col("qv")).as("cos"))
       .withColumn("__rn", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cos").desc, col("id").asc)))

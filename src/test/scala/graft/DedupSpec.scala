@@ -46,6 +46,25 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.keySet.exists { case (a, b) => a == 3L || b == 3L })
   }
 
+  test("minHashCandidates: a duplicated input id never pairs with itself") {
+    val withDup = docs.union(Seq(1L -> "the quick brown fox jumps over the lazy dog")
+      .toDF("doc_id", "text"))
+    val pairs = Dedup.minHashCandidates(withDup, "doc_id", "text",
+        shingleN = 2, bands = 8, rowsPerBand = 2, minJaccard = 0.3)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(pairs.forall { case (a, b) => a < b }, pairs.toSeq)
+    assert(pairs.toSet.contains((1L, 4L)))
+  }
+
+  test("bucket guard compares in long space: a bound above Int.MaxValue " +
+      "passes a normal bucket") {
+    def pairs(maxBucketRows: Long) = Dedup.minHashCandidates(docs, "doc_id",
+        "text", shingleN = 2, bands = 8, rowsPerBand = 2, minJaccard = 0.3,
+        maxBucketRows = maxBucketRows)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs(Int.MaxValue.toLong + 1) == pairs(0L))
+  }
+
   test("banded bucket guardrails trip on degenerate corpora, 0 disables") {
     // 5 byte-identical docs share every band bucket in both hash families
     val dup = (0L until 5L).map(i => (i, "same exact text in every document"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -375,5 +376,110 @@ class SimilaritySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.ivfMaybeRetrain(spark, dir, dim = 4, maxImbalance = 1.0)
     }: Unit
+  }
+
+  /** The SQL form of ivfTopKMultiIndexed before its query side moved to the
+    * driver: probe cells from interpreted centroid scores, a posexplode and
+    * a row_number window, the query rows looked up under each broadcast.
+    */
+  private def ivfTopKMultiIndexedSql(path: String, queryIds: Seq[Long], k: Int,
+                                     nProbe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cents = Similarity.ivfReadCentroids(spark, path)
+    val idx = graft.pipeline.Tombstones.exclude(spark.read.parquet(path), path)
+      .select(col("id"), col("v"), col("cell"))
+    val q = idx.filter(col("id").isin(queryIds: _*))
+      .select(col("id").as("query_id"), col("v").as("qv"))
+    val scores = cents.toIndexedSeq.map { plane =>
+      aggregate(zip_with(col("qv"), array(plane.toIndexedSeq.map(lit): _*),
+        (x, h) => x.cast("double") * h), lit(0.0), (acc, v) => acc + v)
+    }
+    val probe = q.select(col("query_id"), posexplode(array(scores: _*)))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("col").desc, col("pos").asc)))
+      .filter(col("__rn") <= nProbe)
+      .select(col("query_id"), col("pos").cast("int").as("cell"))
+    idx.join(broadcast(probe), Seq("cell"))
+      .filter(col("id") =!= col("query_id"))
+      .join(broadcast(q), Seq("query_id"))
+      .select(col("query_id"), col("id"), Similarity.cosine(col("v"), col("qv")).as("cos"))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("cos").desc, col("id").asc)))
+      .filter(col("__rn") <= k)
+      .select("query_id", "id", "cos")
+  }
+
+  test("ivfTopKMultiIndexed equals its SQL form through deletes, a tagged " +
+      "append and a purge; absent and tombstoned query ids drop") {
+    val emb = Similarity.clusteredEmbeddings(spark, nClusters = 6,
+      perCluster = 20, dim = 8, noise = 0.2)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-multi")
+      .toString + "/idx"
+    Similarity.ivfWriteIndex(emb.filter(col("vec_id") < 100), "vec_id",
+      "embedding", dim = 8, nCentroids = 6, dir,
+      centroids = Similarity.kMeansCentroids(emb, "embedding", dim = 8, k = 6))
+    def rows(df: DataFrame) =
+      df.as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
+    def same(qids: Seq[Long], nProbe: Int): Seq[(Long, Long, Double)] = {
+      val got = Similarity.ivfTopKMultiIndexed(spark, dir, qids, k = 5, nProbe)
+      val want = ivfTopKMultiIndexedSql(dir, qids, k = 5, nProbe)
+      assert(got.schema == want.schema)
+      val r = rows(got)
+      assert(r == rows(want), s"qids=$qids nProbe=$nProbe")
+      r
+    }
+    val qids = Seq(0L, 21L, 42L, 63L, 84L, 99L, 5000L) // 5000 is absent
+    def checkAll(): Unit = Seq(1, 2, 6).foreach(same(qids, _))
+    checkAll()
+    graft.pipeline.Tombstones.delete(Seq(21L, 3L, 44L).toDF("id"), "id", dir,
+      Some("d1"))
+    checkAll()
+    val afterDelete = same(qids, 2)
+    assert(!afterDelete.exists(r => r._1 == 21L || Set(3L, 44L)(r._2)))
+    Similarity.ivfAppendIndex(emb.filter(col("vec_id") >= 100), "vec_id",
+      "embedding", dir, Some("a1"))
+    checkAll()
+    assert(same(qids :+ 110L, 2).exists(_._1 == 110L)) // appended query id
+    assert(graft.pipeline.Tombstones.purge(spark, dir,
+      partitionCols = Seq("cell")) == 3L)
+    checkAll()
+    assert(same(Seq(21L, 5000L), 2).isEmpty) // tombstoned + absent: empty
+  }
+
+  test("ivfTopKMultiIndexed: exact probe-cell score ties break by cell " +
+      "ascending; one cell-pruned corpus scan, no window on the query side") {
+    def pt(id: Long, a: Float, b: Float, c: Float) = (id, Array(a, b, c, 0.0f))
+    // the query (1,0,0,0) scores 0.5 exactly on cells 0 and 1
+    val cents = Array(Array(0.5, 0.5, 0, 0), Array(0.5, -0.5, 0, 0),
+      Array(-1.0, 0, 0, 0), Array(0.0, 0, 1, 0))
+    assert(Similarity.probeCells(Array(1.0, 0, 0, 0), cents, 2) == Seq(0, 1))
+    val base = (Seq(pt(0, 1, 0, 0)) ++
+      (1 to 4).map(i => pt(i, 1, 0.1f * i, 0)) ++     // cell 0
+      (5 to 8).map(i => pt(i, 1, -0.1f * i, 0)) ++    // cell 1
+      (9 to 10).map(i => pt(i, -1, 0, 0.1f * i)) ++   // cell 2
+      (11 to 12).map(i => pt(i, 0, 0, 1)))            // cell 3
+      .toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-tie")
+      .toString + "/idx"
+    Similarity.ivfWriteIndex(base, "vec_id", "embedding", dim = 4,
+      nCentroids = 4, dir, centroids = cents)
+    val got = Similarity.ivfTopKMultiIndexed(spark, dir, Seq(0L), k = 10,
+      nProbe = 1)
+    val ids = got.select("id").as[Long].collect().toSet
+    assert(ids == (1L to 4L).toSet, ids) // cell 0, not cell 1
+    assert(got.as[(Long, Long, Double)].collect().sortBy(_._2).toSeq ==
+      ivfTopKMultiIndexedSql(dir, Seq(0L), k = 10, nProbe = 1)
+        .as[(Long, Long, Double)].collect().sortBy(_._2).toSeq)
+    val plan = got.queryExecution.sparkPlan
+    val scans = plan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size == 1, plan)
+    assert(scans.head.partitionFilters.exists(_.references.exists(_.name == "cell")),
+      plan)
+    val windows = plan.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w }
+    assert(windows.size == 1, plan) // the per-query top-k ranking only
+    val none = Similarity.ivfTopKMultiIndexed(spark, dir, Seq(77L), k = 10)
+    assert(none.schema == got.schema && none.isEmpty) // all-absent batch
   }
 }
