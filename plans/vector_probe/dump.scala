@@ -39,11 +39,12 @@ Thread.sleep(500)
 val j2 = jobs.get
 val t2 = System.nanoTime
 val fin = df.queryExecution.explainString(FormattedMode)
-val text = s"# vector_probe query batch: Similarity.ivfTopKMultiIndexed - $tag\n\n" +
+val text = s"# vector_probe query batch: Similarity.ivfTopKMultiIndexed — $tag\n\n" +
   "One batch of 8 top-10 queries, nProbe = 4, on a 10,000 x 32 clustered IVF index\n" +
   "with 16 k-means cells and 104 tombstoned ids (the `graft.Sessions.local` settings at 4 cores).\n" +
   f"Spark jobs while building the frame: ${j1 - j0}; during collect(): ${j2 - j1}; rows: ${rows.length}.\n" +
   f"One warm run on a shared 4-core VM: construct ${(t1 - t0) / 1e9}%.3f s, collect ${(t2 - t1) / 1e9 - 0.5}%.3f s.\n\n" +
   "## Initial plan\n\n" + initial + "\n## Final plan (after collect)\n\n" + fin
-java.nio.file.Files.write(java.nio.file.Paths.get(sys.env("PLAN_OUT")), text.getBytes("UTF-8"))
+java.nio.file.Files.write(java.nio.file.Paths.get(sys.env("PLAN_OUT")),
+  text.replace(dir, "<index root>").getBytes("UTF-8"))
 System.exit(0)

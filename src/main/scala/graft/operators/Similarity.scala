@@ -345,9 +345,9 @@ object Similarity {
     // `array_position(array(centroidScores…), array_max(…)) - 1` form, so
     // no assignment can move — but nCentroids × dim interpreted HOF
     // lambdas per row (× the plan duplicating the array into the argmax
-    // terms) become one generated loop. Probe-cell selection still uses
-    // [[centroidScores]] on the (single) query row, where the HOF cost is
-    // irrelevant and posexplode needs the full dots array.
+    // terms) become one generated loop. Only the in-memory ivfTopK(Multi)
+    // still pick probe cells with [[centroidScores]] (posexplode needs the
+    // dots array); the persisted-index probes use [[probeCells]].
     graft.expressions.VectorExpressions.dotsArgmax(vec, centroids)
 
   /** IVF-style ANN top-k: corpus rows are assigned to their nearest of
@@ -651,11 +651,11 @@ object Similarity {
   }
 
   /** Load the centroid sidecar written by [[ivfWriteIndex]] under its
-    * declared schema: columns bind by name, whatever the file's column
-    * order, and no schema-inference job runs. A missing sidecar (index
-    * written by an older build, or a crash between the data write and the
-    * sidecar write) fails with an actionable message instead of a raw
-    * path-not-found AnalysisException.
+    * declared schema (columns bind by name; no schema-inference job). A
+    * missing or empty sidecar (index written by an older build, a crash
+    * between the data and sidecar writes, or one during the sidecar's
+    * overwrite that left only `_temporary`) fails with an actionable
+    * message instead of a raw AnalysisException or an index with no cells.
     */
   def ivfReadCentroids(spark: org.apache.spark.sql.SparkSession,
                        path: String,
@@ -664,20 +664,18 @@ object Similarity {
     // `kind`/`writer` only change the error hint — the sidecar FORMAT
     // contract lives here once, shared by every centroid-sidecar index
     // (IVF, SemDeDup); see writeCentroidSidecar.
-    val side =
-      try spark.read.schema("cell INT, centroid ARRAY<DOUBLE>")
-        .parquet(s"$path/_centroids")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"$kind index at $path has no readable centroid sidecar " +
-              s"(_centroids); rewrite the index with $writer or pass " +
-              "centroids explicitly", e)
-      }
+    def unreadable(cause: Throwable) = new IllegalStateException(s"$kind index at " +
+      s"$path has no readable centroid sidecar (_centroids); rewrite the index " +
+      s"with $writer or pass centroids explicitly", cause)
+    val side = try spark.read.schema("cell INT, centroid ARRAY<DOUBLE>")
+      .parquet(s"$path/_centroids")
+    catch { case e: org.apache.spark.sql.AnalysisException => throw unreadable(e) }
     // driver-side cell sort: a cluster orderBy before a k-row collect pays
     // a range-partitioning sample pass + shuffle per index load
     // (Bpe.readMerges note); k is the centroid count, always tiny.
-    side.collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
+    val cents = side.collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
+    if (cents.isEmpty) throw unreadable(null) // no data files read as 0 rows
+    cents
   }
 
   /** The centroid sidecar write — the single home of the `_centroids`
@@ -735,10 +733,8 @@ object Similarity {
       .limit(k)
   }
 
-  /** A query vector's `nProbe` cells: centroid dot products (the
-    * left-to-right double sum from 0.0 of [[centroidScores]]) ranked as
-    * Spark sorts `score desc, cell asc` — NaN first, cell-ascending ties.
-    */
+  /** A query vector's `nProbe` cells: centroid dot products (the double
+    * sum of [[centroidScores]]) ranked as Spark sorts `score desc, cell asc`. */
   private[graft] def probeCells(v: Array[Double], cents: Array[Array[Double]],
                                 nProbe: Int): Seq[Int] = {
     val scores = cents.map(h =>
@@ -749,22 +745,25 @@ object Similarity {
 
   /** The rows of a persisted centroid index that a bounded query batch
     * probes, each joined to its query. `queries` (key, vector) is collected
-    * eagerly, [[probeCells]] runs on the driver, and the result is ONE
-    * `idx` scan pruned by the static `cell IN (...)` (`PartitionFilters`)
-    * joined on cell to the broadcast local (key, vector, cell) relation.
-    */
+    * eagerly and its cells picked by [[probeCells]]: ONE `idx` scan pruned
+    * by a static `cell IN (...)`, joined to broadcast local (key, cell) and
+    * (key, vector) relations, so each vector is broadcast once. */
   private[graft] def probedRows(idx: DataFrame, queries: DataFrame,
                                 cents: Array[Array[Double]],
                                 nProbe: Int): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val probe = queries.collect().toSeq.flatMap { r =>
+    val (spark, qRows) = (idx.sparkSession, queries.collect().toSeq)
+    val key = queries.schema.head
+    val probe = qRows.flatMap { r =>
       val v = r.getSeq[Number](1).iterator.map(_.doubleValue).toArray
-      probeCells(v, cents, nProbe).map(c => Row(r.get(0), r.get(1), c))
-    }
-    val probeDf = idx.sparkSession.createDataFrame(probe.asJava,
-      queries.schema.add("cell", "int", nullable = false))
-    idx.filter(col("cell").isin(probe.map(_.getInt(2)).distinct.sorted: _*))
+      probeCells(v, cents, nProbe).map(c => Row(r.get(0), c))
+    }.distinct
+    val probeDf = spark.createDataFrame(probe.asJava, org.apache.spark.sql.types
+      .StructType(Seq(key)).add("cell", "int", nullable = false))
+    idx.filter(col("cell").isin(probe.map(_.getInt(1)).distinct.sorted: _*))
       .join(broadcast(probeDf), Seq("cell"))
+      .join(broadcast(spark.createDataFrame(qRows.asJava, queries.schema)),
+        Seq(key.name))
   }
 
   /** Multi-query top-k probe against a PERSISTED IVF index — the

@@ -482,4 +482,24 @@ class SimilaritySpec extends SparkSpec {
     val none = Similarity.ivfTopKMultiIndexed(spark, dir, Seq(77L), k = 10)
     assert(none.schema == got.schema && none.isEmpty) // all-absent batch
   }
+
+  test("ivfReadCentroids: a _centroids directory without data files fails " +
+      "loudly, as a crash during the sidecar's overwrite leaves it") {
+    val path = java.nio.file.Files.createTempDirectory("graft-ivf-nocents")
+      .resolve("idx").toString
+    Similarity.ivfWriteIndex(vecs, "vec_id", "embedding", dim = 3,
+      nCentroids = 4, path = path)
+    val side = new java.io.File(s"$path/_centroids")
+    side.listFiles().foreach(f => assert(f.delete(), f))
+    assert(new java.io.File(side, "_temporary/0").mkdirs())
+    val probes = Seq[() => Any](
+      () => Similarity.ivfReadCentroids(spark, path),
+      () => Similarity.ivfTopKIndexed(spark, path, dim = 3, queryId = 0, k = 2),
+      () => Similarity.ivfTopKMultiIndexed(spark, path, Seq(0L), k = 2))
+    probes.foreach { probe =>
+      val e = intercept[IllegalStateException](probe())
+      assert(e.getMessage.contains("no readable centroid sidecar") &&
+        e.getMessage.contains("ivfWriteIndex"), e.getMessage)
+    }
+  }
 }
